@@ -1,12 +1,13 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFooter
 import org.apache.spark.sql.functions.{col, expr}
 
 /** Typed loaders for the test star schema (see TESTDATA.md).
   *
   * All reads go through here so every operator benefits from the same
-  * pushdown-friendly scan: `spark.read.parquet` exposes min/max stats,
+  * pushdown-friendly scan: [[parquet]] exposes min/max stats,
   * predicate pushdown and column pruning to Catalyst. At cluster scale
   * the same call reads a partitioned table — operators never assume a
   * single file.
@@ -14,13 +15,32 @@ import org.apache.spark.sql.functions.{col, expr}
 object Tables {
   private def p(dir: String, name: String) = s"$dir/$name.parquet"
 
-  def region(s: SparkSession, dir: String): DataFrame    = s.read.parquet(p(dir, "region"))
-  def nation(s: SparkSession, dir: String): DataFrame    = s.read.parquet(p(dir, "nation"))
-  def customer(s: SparkSession, dir: String): DataFrame  = s.read.parquet(p(dir, "customer"))
-  def supplier(s: SparkSession, dir: String): DataFrame  = s.read.parquet(p(dir, "supplier"))
-  def part(s: SparkSession, dir: String): DataFrame      = s.read.parquet(p(dir, "part"))
-  def orders(s: SparkSession, dir: String): DataFrame    = s.read.parquet(p(dir, "orders"))
-  def lineitem(s: SparkSession, dir: String): DataFrame  = s.read.parquet(p(dir, "lineitem"))
+  /** `s.read.parquet(path)` without its schema-inference Spark job: the
+    * one footer Spark would read is read on the driver and handed to
+    * `s.read.schema(...)`. It mirrors Spark's `mergeSchema`-off rule:
+    * the schema comes from `_common_metadata`, else `_metadata`, else
+    * the first data file in path order (hidden files such as
+    * `_SUCCESS` skipped), converted under the session's parquet flags
+    * (binaryAsString, int96AsTimestamp, inferTimestampNTZ,
+    * nanosAsLong, respectUnknownTypeAnnotation). Errors are Spark's
+    * own: `[PATH_NOT_FOUND]` for a missing path,
+    * `[UNABLE_TO_INFER_SCHEMA]` when no footer exists. With
+    * `spark.sql.parquet.mergeSchema` on, Spark infers as usual. The one
+    * parquet read in src/main; TablesSpec pins schema and row parity
+    * with `s.read.parquet`. */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    GraftParquetFooter.schema(s, path) match {
+      case Some(schema) => s.read.schema(schema).parquet(path)
+      case None => s.read.parquet(path)
+    }
+
+  def region(s: SparkSession, dir: String): DataFrame    = parquet(s, p(dir, "region"))
+  def nation(s: SparkSession, dir: String): DataFrame    = parquet(s, p(dir, "nation"))
+  def customer(s: SparkSession, dir: String): DataFrame  = parquet(s, p(dir, "customer"))
+  def supplier(s: SparkSession, dir: String): DataFrame  = parquet(s, p(dir, "supplier"))
+  def part(s: SparkSession, dir: String): DataFrame      = parquet(s, p(dir, "part"))
+  def orders(s: SparkSession, dir: String): DataFrame    = parquet(s, p(dir, "orders"))
+  def lineitem(s: SparkSession, dir: String): DataFrame  = parquet(s, p(dir, "lineitem"))
   /** events with `ts` normalized to TimestampType (micros, session TZ =
     * UTC), whichever on-disk generation is present. The current
     * test-corpus writer emits parquet TIMESTAMP(MICROS,
@@ -54,10 +74,10 @@ object Tables {
   def eventsRaw(s: SparkSession, dir: String): DataFrame = {
     // no-op for TIMESTAMP(MICROS) files; lets legacy NANOS files load as long
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(p(dir, "events"))
+    parquet(s, p(dir, "events"))
   }
-  def documents(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "documents"))
-  def embeddings(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "embeddings"))
+  def documents(s: SparkSession, dir: String): DataFrame = parquet(s, p(dir, "documents"))
+  def embeddings(s: SparkSession, dir: String): DataFrame = parquet(s, p(dir, "embeddings"))
 
   /** `documents`, guaranteed at least CLUSTER-CORE scan parallelism
     * for a COMPUTE-HEAVY first pass (normalize/tokenize/shingle/
@@ -106,12 +126,6 @@ object Tables {
     * rewrite a corpus in place under one session can re-probe). */
   private[graft] def clearScanPartsCache(): Unit = scanPartsCache.clear()
 
-  /** Metadata-only fingerprint of one table: path + per-file
-    * (name, length, mtime). One FS listing, no data read — the cache key
-    * for per-corpus memoization (Similarity centroids, Dedup confirmed
-    * pairs): a re-ingested corpus at the same path changes file
-    * lengths/mtimes and misses the cache, so a long-lived JVM can never
-    * serve results computed on a previous corpus generation. */
   /** Metadata-only on-disk size of one table (sum of file lengths, one
     * FS listing, no data read, no Spark job) — the cheap scale probe
     * size-adaptive operators gate on (the quantile family's serial-
@@ -123,6 +137,12 @@ object Tables {
     fs.listStatus(path).map(_.getLen).sum
   }
 
+  /** Metadata-only fingerprint of one table: path + per-file
+    * (name, length, mtime). One FS listing, no data read — the cache key
+    * for per-corpus memoization (Similarity centroids, Dedup confirmed
+    * pairs): a re-ingested corpus at the same path changes file
+    * lengths/mtimes and misses the cache, so a long-lived JVM can never
+    * serve results computed on a previous corpus generation. */
   def fingerprint(s: SparkSession, dir: String, table: String): String = {
     val path = new org.apache.hadoop.fs.Path(p(dir, table))
     val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)

@@ -801,7 +801,7 @@ object Dedup {
       if (hit != null) hit
       else {
         d9InvBuildCount.incrementAndGet()
-        val rows = s.read.parquet(d9BenchmarksPath(s, dir))
+        val rows = Tables.parquet(s, d9BenchmarksPath(s, dir))
           .withColumn("norm", TextOps.normText(col("prompt")))
           .withColumn("toks", expr(TextOps.toksExpr))
           .select(explode(
@@ -835,7 +835,7 @@ object Dedup {
     * operators below the scan. */
   def d9DecontaminateXt(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val inv = s.read.parquet(d9BenchmarksPath(s, dir))
+    val inv = Tables.parquet(s, d9BenchmarksPath(s, dir))
       .withColumn("norm", TextOps.normText(col("prompt")))
       .withColumn("toks", expr(TextOps.toksExpr))
       .select(explode(
@@ -882,7 +882,7 @@ object Dedup {
     * cardinality. */
   def d9Report(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val bench = s.read.parquet(d9BenchmarksPath(s, dir))
+    val bench = Tables.parquet(s, d9BenchmarksPath(s, dir))
       .withColumn("norm", TextOps.normText(col("prompt")))
       .withColumn("toks", expr(TextOps.toksExpr))
       .select(col("bench_id"),
@@ -1089,7 +1089,7 @@ object Dedup {
     * per-generation corpus pass (probe times it separately). */
   def d11DedupIncremental(s: SparkSession, dir: String): DataFrame =
     d11Admit(s, dir,
-      s.read.parquet(d11IncrementPath(s, dir)))
+      Tables.parquet(s, d11IncrementPath(s, dir)))
 
   /** The admission core over an explicit increment frame
     * (doc_id, text) — factored out so the scale probe can admit a
@@ -1100,8 +1100,8 @@ object Dedup {
       inc: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val idx = d11IndexPath(s, dir)
-    val idxBands = s.read.parquet(s"$idx/bands.parquet")
-    val contents = s.read.parquet(s"$idx/contents.parquet")
+    val idxBands = Tables.parquet(s, s"$idx/bands.parquet")
+    val contents = Tables.parquet(s, s"$idx/contents.parquet")
 
     // shard collapsed to distinct content (the contentGroups lesson),
     // eagerly materialized once — four screening branches reuse it
@@ -1515,8 +1515,8 @@ object Dedup {
       inc: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val idx = d11IndexPath(s, dir)
-    val contents = s.read.parquet(s"$idx/contents.parquet")
-    val idxBands = s.read.parquet(s"$idx/bands.parquet")
+    val contents = Tables.parquet(s, s"$idx/contents.parquet")
+    val idxBands = Tables.parquet(s, s"$idx/bands.parquet")
     val e = inc
       .withColumn("norm", TextOps.normText(col("text")))
       .withColumn("ih", md5(col("norm")))
@@ -1537,7 +1537,7 @@ object Dedup {
       .filter(col("ch") =!= col("ih")) // identical content → exact path
       .select(col("doc_id"), col("rep"), col("inorm"), col("ishset"))
       .dropDuplicates("doc_id", "rep")
-    val corpusSide = s.read.parquet(st11ShsetsPath(s, dir))
+    val corpusSide = Tables.parquet(s, st11ShsetsPath(s, dir))
       .join(broadcast(cand.select(col("rep")).distinct()), Seq("rep"))
     val inter = size(array_intersect(col("ishset"), col("cshset")))
       .cast("long")

@@ -431,7 +431,7 @@ object Similarity {
       val path = artifactPath(s, k)
       val loaded: Option[Array[Array[Float]]] =
         try {
-          val rows = s.read.parquet(path)
+          val rows = Tables.parquet(s, path)
             .as[(Int, Array[Float], String)].collect()
           val cent = rows.sortBy(_._1).map(_._2)
           // trust the artifact only if complete AND its embedded
@@ -1023,7 +1023,7 @@ object Similarity {
         .parquet(s"$path/assign")
     }
     if (missing("probed"))
-      s.read.parquet(s"$path/assign")
+      Tables.parquet(s, s"$path/assign")
         .select(col("vec_id"), col("embedding"),
           explode(col("probes")).as("pcell"))
         .repartition(col("pcell")) // one writer task per probed cell
@@ -1060,7 +1060,7 @@ object Similarity {
     edgeCache.computeIfAbsent(
       s.sparkContext.applicationId + "/" + path,
       _ => {
-        val knn = s.read.parquet(s"$path/edges")
+        val knn = Tables.parquet(s, s"$path/edges")
           .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
         knn.unionByName(
             knn.select(col("dst").as("src"), col("src").as("dst")))
@@ -1152,7 +1152,7 @@ object Similarity {
       .localCheckpoint(true) // query-sized; reused for the cell list + join
     val probedCells = qprobe.select("qc").distinct().collect()
       .map(_.getInt(0))
-    val seedProbe = s.read.parquet(s"$idx/assign")
+    val seedProbe = Tables.parquet(s, s"$idx/assign")
       .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
       .select(col("vec_id").as("node"), col("embedding").as("ne"),
         col("cell"))
@@ -1261,7 +1261,7 @@ object Similarity {
     * in SQL; each copy's planted nearest neighbor is its source at
     * cosine exactly 1.0. */
   def s15GraphAdmit(s: SparkSession, dir: String): DataFrame =
-    s15Admit(s, dir, s.read.parquet(s8IncrementPath(s, dir)))
+    s15Admit(s, dir, Tables.parquet(s, s8IncrementPath(s, dir)))
 
   /** The admission core over an explicit (vec_id, embedding) shard —
     * factored like [[d12Admit]]/[[s8WriteAssigned]] so the scale probe
@@ -1299,7 +1299,7 @@ object Similarity {
     // 1. new-vector edges: shard probes × (old members of those cells
     //    ∪ the shard itself), shard side broadcast — members never
     //    shuffle, and the read is partition-pruned to the probed cells
-    val members = s.read.parquet(s"$idx/assign")
+    val members = Tables.parquet(s, s"$idx/assign")
       .filter(col("cell").isin(probed: _*))
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"),
         col("cell"))
@@ -1319,7 +1319,7 @@ object Similarity {
     // 2. affected-old updates: probers of the landed cells (pruned
     //    inverted-index read), paired with the new arrivals in the
     //    cell they probe, then merged with their STORED edge lists
-    val affected = s.read.parquet(s"$idx/probed")
+    val affected = Tables.parquet(s, s"$idx/probed")
       .filter(col("pcell").isin(landed: _*))
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("pcell"))
@@ -1331,7 +1331,7 @@ object Similarity {
         VectorOps.cosine("qe", "ne").as("cos"))
     val affIds = affected.select("query_id").distinct()
       .localCheckpoint(true) // landed-cells-bounded; reused by 2 joins
-    val oldEdges = s.read.parquet(s"$idx/edges")
+    val oldEdges = Tables.parquet(s, s"$idx/edges")
     val merged = oldEdges
       .join(broadcast(affIds), Seq("query_id"), "left_semi")
       .select("query_id", "neighbor_id", "cos")
@@ -1997,7 +1997,7 @@ object Similarity {
         .write.partitionBy("cell").mode("overwrite").parquet(s"$path/base")
     }
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/inc", "_SUCCESS"))) {
-      s8WriteAssigned(s, dir, s.read.parquet(s8IncrementPath(s, dir)),
+      s8WriteAssigned(s, dir, Tables.parquet(s, s8IncrementPath(s, dir)),
         s"$path/inc")
     }
     path
@@ -2053,8 +2053,8 @@ object Similarity {
         explode(probeExpr).as("qc"))
       .localCheckpoint(true) // query-sized; reused for cells + join
     val probed = q.select("qc").distinct().collect().map(_.getInt(0))
-    val index = s.read.parquet(s"$idx/base")
-      .unionByName(s.read.parquet(s"$idx/inc"))
+    val index = Tables.parquet(s, s"$idx/base")
+      .unionByName(Tables.parquet(s, s"$idx/inc"))
       .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("neighbor_id"))
@@ -2091,7 +2091,7 @@ object Similarity {
   def s13CompactIndex(s: SparkSession, dir: String): DataFrame = {
     val idx = s8IndexPath(s, dir)
     graft.sources.Sources.compactPartitionedPath(s, s"$idx/inc", "cell")
-    s.read.parquet(s"$idx/inc")
+    Tables.parquet(s, s"$idx/inc")
       .groupBy("cell")
       .agg(count(lit(1)).as("n_vecs"), min("vec_id").as("min_id"),
         max("vec_id").as("max_id"), sum("vec_id").as("sum_id"))
@@ -2179,7 +2179,7 @@ object Similarity {
     * exact copies drop (cos 1.0 with their source), negated vectors
     * survive except against the corpus's ≤ −τ tail. */
   def d12SemdedupIncremental(s: SparkSession, dir: String): DataFrame =
-    d12Admit(s, dir, s.read.parquet(d12IncrementPath(s, dir)))
+    d12Admit(s, dir, Tables.parquet(s, d12IncrementPath(s, dir)))
 
   /** The semantic-admission core over an explicit (vec_id, embedding)
     * shard — factored out like [[Dedup.d11Admit]]/[[s8WriteAssigned]]
@@ -2195,7 +2195,7 @@ object Similarity {
       .withColumn("cell", cellExpr)
       .localCheckpoint(true) // shard-sized; reused by 3 joins below
     val incCells = inc.select("cell").distinct().collect().map(_.getInt(0))
-    val base = s.read.parquet(s"$idx/base")
+    val base = Tables.parquet(s, s"$idx/base")
       .filter(col("cell").isin(incCells.map(Integer.valueOf): _*))
     val vsCorpus = inc.as("i")
       .join(base.as("b"), col("i.cell") === col("b.cell"))
@@ -2306,8 +2306,8 @@ object Similarity {
     val idx = s8IndexPath(s, dir)
     val t = graft.sources.Sources.ensureStagedPartitioned(
       s, s11Table(s, dir), "cell",
-      s.read.parquet(s"$idx/base")
-        .unionByName(s.read.parquet(s"$idx/inc")))
+      Tables.parquet(s, s"$idx/base")
+        .unionByName(Tables.parquet(s, s"$idx/inc")))
     val deleteKeys = s.table(t)
       .filter(col("vec_id") % S11ForgetMod === 0)
       .select("vec_id", "cell").distinct()
@@ -2746,7 +2746,7 @@ object Similarity {
       val path = s"$base/$k"
       val loaded: Option[(Array[Array[Array[Float]]], Long)] =
         try {
-          val rows = s.read.parquet(path)
+          val rows = Tables.parquet(s, path)
             .as[(Int, Int, Array[Float], String, Long)].collect()
           val cb0 = Array.tabulate(PqM, PqK)((m, c) =>
             rows.find(r => r._1 == m && r._2 == c).map(_._3).orNull)

@@ -188,7 +188,7 @@ object Sources {
       .map(_.getPath.getName.drop(partCol.length + 1))
       .toIndexedSeq
     if (fragmented.isEmpty) return 0
-    val slice = s.read.parquet(path)
+    val slice = graft.Tables.parquet(s, path)
       .filter(col(partCol).isin(fragmented: _*))
       .localCheckpoint(true)
     // per-writer option, never a session-conf mutation: a concurrent
@@ -435,14 +435,14 @@ object Sources {
     val unique = incoming.dropDuplicates(key)
     val fresh =
       if (fs.exists(target)) {
-        val existing = s.read.parquet(path).select(key)
+        val existing = graft.Tables.parquet(s, path).select(key)
         unique.join(existing, Seq(key), "left_anti")
       } else unique
     val scratch = new org.apache.hadoop.fs.Path(
       path + ".staging-" + java.util.UUID.randomUUID())
     fresh.write.mode(SaveMode.Overwrite).parquet(scratch.toString)
     try {
-      val staged = s.read.parquet(scratch.toString)
+      val staged = graft.Tables.parquet(s, scratch.toString)
       val n = staged.count()
       if (n > 0) staged.write.mode(SaveMode.Append).parquet(path)
       n
